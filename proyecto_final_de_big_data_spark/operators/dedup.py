@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils.caching import Pins
+
 _MASK64 = (1 << 64) - 1
 
 
@@ -356,35 +358,32 @@ def jaccard_verify(
     intersection is far cheaper than string-array.
 
     The verified pair set (small relative to the corpus) is materialized
-    eagerly so the persisted shingle frame can be released before
-    returning instead of leaking across the session.
+    eagerly.
     """
-    from ..utils.caching import materialize_and_release
-
     pair_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
     needed = df.join(pair_ids, id_col, "left_semi")
-    # Persisted: the shingle set attaches to BOTH pair sides — without it
-    # the semi-join + Arrow shingling subtree runs once per join.
-    sh = (
-        shingle_hash_arrays(needed, id_col, text_col, shingle_n)
-        .withColumnRenamed("__shash", "__sh")
-        .persist()
-    )
-    j = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+    with Pins() as pin:
+        # Pinned: the shingle set attaches to BOTH pair sides — without it
+        # the semi-join + Arrow shingling subtree runs once per join.
+        sh = pin(
+            shingle_hash_arrays(needed, id_col, text_col, shingle_n)
+            .withColumnRenamed("__shash", "__sh")
         )
-        .select("id_a", "id_b", "jaccard")
-    )
-    return materialize_and_release(j.filter(F.col("jaccard") >= threshold), sh)
+        j = (
+            pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
+            .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
+            .withColumn(
+                "jaccard",
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")),
+            )
+            .select("id_a", "id_b", "jaccard")
+        )
+        return j.filter(F.col("jaccard") >= threshold).localCheckpoint(eager=True)
 
 
 def jaccard_pairs_index(
@@ -543,19 +542,16 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs, Jaccard-verified.
 
-    Signatures and candidate pairs are persisted: both are tiny relative
+    Signatures and candidate pairs are pinned: both are tiny relative
     to the corpus (num_hashes longs per doc; candidate pairs << n²) and
-    each is referenced by multiple downstream joins — without the
-    persist, Spark re-evaluates the Arrow signature pass once per
-    reference (up to 6× across the banding self-join and the pair-table
-    fan-out in verification). ``jaccard_verify`` materializes the final
-    pair set eagerly, so both frames are released before returning.
+    each is referenced by multiple downstream joins — unpinned, Spark
+    re-evaluates the Arrow signature pass once per reference (up to 6×
+    across the banding self-join and the pair-table fan-out in
+    verification). ``jaccard_verify`` materializes the final pair set
+    eagerly.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).persist()
-    try:
+    with Pins() as pin:
+        sigs = pin(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
+        cands = pin(lsh_candidate_pairs(sigs, id_col, bands, rows_per_band))
         return jaccard_verify(df, cands, id_col, text_col, shingle_n, threshold)
-    finally:
-        cands.unpersist()
-        sigs.unpersist()

@@ -32,6 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Rounds between the lazy localCheckpoint lineage cuts of the
+# fixed-iteration operators; the last round is always cut too. PageRank
+# cuts every 4th round: at sf0.1 that ran 33 jobs against 38 for every
+# 2nd round.
+_PAGERANK_CHECKPOINT_EVERY = 4
+_CHECKPOINT_EVERY = 2
+
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct (src>dst) orientation, self-loops dropped."""
@@ -255,7 +262,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
     broadcast_max_nodes: int = 1_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
@@ -272,15 +278,14 @@ def pagerank(
     Scale shape: per iteration ONE contribution join (rank ⋈ edges,
     both sides partitioned by the join key) + one destination-keyed
     aggregation — the classic Pregel message pattern as DataFrame ops.
-    Lineage is truncated every ``checkpoint_every`` rounds with a lazy
-    ``localCheckpoint`` (same discipline as
+    Lineage is truncated every ``_PAGERANK_CHECKPOINT_EVERY`` rounds
+    with a lazy ``localCheckpoint`` (same discipline as
     :func:`connected_components`): without truncation the plan doubles
     per iteration and the optimizer chokes long before the data does,
     while truncating EVERY round materializes 10 intermediate rank
-    frames — measured at sf0.1, every-2nd-round was the stable
-    optimum (ckpt1 4.3–9.2 s vs ckpt2 4.0–5.0 s over 3 runs each) and
-    bounds plan depth at two rounds. Purely physical: values are
-    unchanged. Driver state is zero — ranks live in a DataFrame.
+    frames (ckpt1 4.3–9.2 s vs ckpt2 4.0–5.0 s at sf0.1 over 3 runs
+    each). Purely physical: values are unchanged. Driver state is
+    zero — ranks live in a DataFrame.
     """
     # Pin the deduped edge frame (lazy localCheckpoint, the house
     # barrier): `e` is referenced THREE times (nodes derivation, outdeg
@@ -368,7 +373,7 @@ def pagerank(
                 ).alias("rank")
             )
         )
-        if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
+        if (it + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 or it == iterations - 1:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -481,7 +486,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over an
     UNDIRECTED edge list (Raghavan, Albert & Kumara, Phys. Rev. E 76,
@@ -511,7 +515,7 @@ def label_propagation(
     sides keyed on node id) + ONE (node, label) count aggregation
     (map-side combined) + ONE per-node struct-min argmax — the same
     Pregel message pattern as :func:`pagerank`, with lineage truncated
-    every ``checkpoint_every`` rounds (lazy localCheckpoint; swap for
+    every ``_CHECKPOINT_EVERY`` rounds (lazy localCheckpoint; swap for
     ``checkpoint`` on a real cluster). The argmax is
     ``min(struct(-count, label))`` so no per-node sort or window
     touches the data and ties resolve to the smallest label by
@@ -562,7 +566,7 @@ def label_propagation(
             )
             .select("node", F.col("__b.l").alias("label"))
         )
-        if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
+        if (it + 1) % _CHECKPOINT_EVERY == 0 or it == iterations - 1:
             labels = labels.localCheckpoint(eager=False)
     return labels
 
@@ -674,7 +678,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 10,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-core subgraph extraction by iterative peeling (Seidman,
     Social Networks 1983; the distributed fixed-round formulation
@@ -704,7 +707,7 @@ def k_core(
     Scale shape (100 TB posture): edge-list working set; per round ONE
     degree aggregation + two semi-joins (both keyed on node id — the
     same shuffle key, so AQE coalesces), lineage truncated every
-    ``checkpoint_every`` rounds (lazy localCheckpoint; swap for
+    ``_CHECKPOINT_EVERY`` rounds (lazy localCheckpoint; swap for
     ``checkpoint`` on a real cluster). No driver state, no collect.
 
     Extension surface — the reference has no graph stage; extension
@@ -728,7 +731,7 @@ def k_core(
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        if (it + 1) % max(1, checkpoint_every) == 0 or it == iterations - 1:
+        if (it + 1) % _CHECKPOINT_EVERY == 0 or it == iterations - 1:
             e = e.localCheckpoint(eager=False)
     sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -746,7 +749,6 @@ def bfs_distances(
     node: str = "node",
     max_hops: int = 6,
     directed: bool = False,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Hop distances from a SOURCE SET by fixed-round frontier
     expansion — distributed unweighted single/multi-source BFS
@@ -781,7 +783,7 @@ def bfs_distances(
     ONE frontier-to-edges equi-join + one distinct + one left-anti
     join against the settled-distance frame (all keyed on node id —
     the same shuffle key, so AQE coalesces), lineage truncated every
-    ``checkpoint_every`` rounds (lazy localCheckpoint; swap for
+    ``_CHECKPOINT_EVERY`` rounds (lazy localCheckpoint; swap for
     ``checkpoint`` on a real cluster). The settled frame only ever
     GROWS by the new frontier (BFS settles each node once — no
     re-relaxation), no driver state, no collect.
@@ -830,7 +832,7 @@ def bfs_distances(
             "dist", F.lit(hop)
         )
         settled = settled.unionByName(new)
-        if hop % max(1, checkpoint_every) == 0 or hop == max_hops:
+        if hop % _CHECKPOINT_EVERY == 0 or hop == max_hops:
             settled = settled.localCheckpoint(eager=False)
             # Re-derive the frontier from the PINNED settled frame
             # (rows with dist == hop are exactly `new`): the next

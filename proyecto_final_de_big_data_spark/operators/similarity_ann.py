@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils.caching import materialize_and_release
+from ..utils.caching import Pins
 from .similarity import as_double_array, cosine
 from .vecmath import cosine_batch, hyperplane_buckets
 
@@ -94,36 +94,34 @@ def embedding_near_dup_pairs(
     one of ``n_tables`` tables. Verification cosine is the Arrow/numpy
     batch variant: consumers of near-dup output threshold or round, so
     ulp-level summation-order differences vs the sequential fold are
-    immaterial (see ``vecmath.cosine_batch``).
-
-    The verified pair set (small relative to the corpus) is materialized
-    eagerly so the persisted banded frame can be released before
-    returning instead of leaking across the session.
+    immaterial (see ``vecmath.cosine_batch``). The verified pair set
+    (small relative to the corpus) is materialized eagerly.
     """
     c = corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
-    # Persisted: the bucket self-join references the banded frame twice —
-    # without it the Arrow projection pass runs once per side.
-    banded = _with_table_buckets(c, "__v", dim, n_planes, n_tables).persist()
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    with Pins() as pin:
+        # Pinned: the bucket self-join references the banded frame twice —
+        # without it the Arrow projection pass runs once per side.
+        banded = pin(_with_table_buckets(c, "__v", dim, n_planes, n_tables))
+        a, b = banded.alias("a"), banded.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.table") == F.col("b.table"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+                F.col("a.__v").alias("__va"),
+                F.col("b.__v").alias("__vb"),
+            )
+            .dropDuplicates(["id_a", "id_b"])
+            .withColumn("cosine_sim", cosine_batch(F.col("__va"), F.col("__vb")))
+            .filter(F.col("cosine_sim") >= threshold)
+            .select("id_a", "id_b", "cosine_sim")
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__v").alias("__va"),
-            F.col("b.__v").alias("__vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine_sim", cosine_batch(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
-    return materialize_and_release(pairs, banded)
+        return pairs.localCheckpoint(eager=True)
 
 
 def ann_cosine_topk(

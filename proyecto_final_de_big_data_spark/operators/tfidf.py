@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import Pins
 from .quality import words
 
 
@@ -35,48 +36,44 @@ def top_terms_by_tfidf(
     (score DESC, term ASC) tie-break is reproducible bit-for-bit by a
     SQL oracle computing the same doubles.
 
-    The exploded token frame feeds BOTH aggregations; un-persisted,
-    each reference re-scans and re-explodes the whole corpus
-    (cache-lifetime contract, utils/caching.py). Default: persist the
-    tokens, eagerly materialize the — tiny — top-k result, release the
-    cache. ``materialize=False`` returns the fully lazy plan instead
-    (plan inspection / further composition; the caller owns any
-    caching, and the double token explode is back).
+    The exploded token frame feeds BOTH aggregations; unpinned, each
+    reference re-scans and re-explodes the whole corpus. Default: pin
+    the tokens and eagerly materialize the — tiny — top-k result.
+    ``materialize=False`` returns the fully lazy plan instead (plan
+    inspection / further composition; the caller owns any caching, and
+    the double token explode is back).
     """
     tok = df.select(id_col, group_col, F.explode(words(text_col)).alias("word"))
-    if materialize:
-        tok = tok.persist()
-    tf = tok.groupBy(group_col, "word").agg(F.count(F.lit(1)).alias("tf_count"))
-    dfreq = tok.groupBy("word").agg(F.count_distinct(F.col(id_col)).alias("df"))
-    if n_docs is not None:
-        # Caller-supplied corpus size: skips the third reference to df —
-        # pass it when df is an expensive derived frame rather than a
-        # bare scan (the extra count there replays the whole upstream
-        # plan; tokenless docs also make a tok-derived count wrong, so
-        # it cannot be inferred from the cached tokens).
-        total = df.sparkSession.range(1).select(F.lit(n_docs).alias("n_docs"))
-    else:
-        total = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "word")
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf_count")
-                * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
-                6,
-            ),
+    with Pins() as pin:
+        if materialize:
+            tok = pin(tok)
+        tf = tok.groupBy(group_col, "word").agg(F.count(F.lit(1)).alias("tf_count"))
+        dfreq = tok.groupBy("word").agg(F.count_distinct(F.col(id_col)).alias("df"))
+        if n_docs is not None:
+            # Caller-supplied corpus size: skips the third reference to df —
+            # pass it when df is an expensive derived frame rather than a
+            # bare scan (the extra count there replays the whole upstream
+            # plan; tokenless docs also make a tok-derived count wrong, so
+            # it cannot be inferred from the cached tokens).
+            total = df.sparkSession.range(1).select(F.lit(n_docs).alias("n_docs"))
+        else:
+            total = df.agg(F.count(F.lit(1)).alias("n_docs"))
+        scored = (
+            tf.join(dfreq, "word")
+            .crossJoin(F.broadcast(total))
+            .withColumn(
+                "tfidf",
+                F.round(
+                    F.col("tf_count")
+                    * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
+                    6,
+                ),
+            )
         )
-    )
-    w = Window.partitionBy(group_col).orderBy(F.desc("tfidf"), F.asc("word"))
-    out = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(group_col, "word", "tf_count", "tfidf", "rn")
-    )
-    if not materialize:
-        return out
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(out, tok)
+        w = Window.partitionBy(group_col).orderBy(F.desc("tfidf"), F.asc("word"))
+        out = (
+            scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= k)
+            .select(group_col, "word", "tf_count", "tfidf", "rn")
+        )
+        return out.localCheckpoint(eager=True) if materialize else out

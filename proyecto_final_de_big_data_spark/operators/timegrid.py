@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.caching import Pins
+
 
 def gap_filled_counts(
     df: DataFrame,
@@ -29,11 +31,11 @@ def gap_filled_counts(
 
     The aggregate is referenced twice (bounds + the grid join) and
     Spark does NOT unify the two subplans (their column pruning
-    differs, so no ReusedExchange). Default: persist the
-    bucket-count-sized aggregate so the corpus is genuinely read once,
-    eagerly materialize the (equally small) gap-filled result, release
-    the cache. ``materialize=False`` returns the lazy plan (plan
-    inspection / composition; the caller owns caching).
+    differs, so no ReusedExchange). Default: pin the
+    bucket-count-sized aggregate so the corpus is genuinely read once
+    and eagerly materialize the (equally small) gap-filled result.
+    ``materialize=False`` returns the lazy plan (plan inspection /
+    composition; the caller owns caching).
     min(date_trunc(ts)) == date_trunc(min(ts)), so deriving bounds
     from the aggregate leaves the grid identical either way.
     """
@@ -42,24 +44,21 @@ def gap_filled_counts(
     if value_col is not None:
         aggs.append(F.round(F.sum(value_col), 6).alias("sum_value"))
     counts = df.groupBy(bucket.alias("bucket")).agg(*aggs)
-    if materialize:
-        counts = counts.persist()
-    bounds = counts.agg(F.min("bucket").alias("b0"), F.max("bucket").alias("b1"))
-    grid = bounds.select(
-        F.explode(
-            F.sequence(F.col("b0"), F.col("b1"), F.expr(f"interval 1 {grain}"))
-        ).alias("bucket")
-    )
-    out = grid.join(counts, "bucket", "left").withColumn(
-        "n_events", F.coalesce(F.col("n_events"), F.lit(0))
-    )
-    if value_col is not None:
-        out = out.withColumn("sum_value", F.coalesce(F.col("sum_value"), F.lit(0.0)))
-    if not materialize:
-        return out
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(out, counts)
+    with Pins() as pin:
+        if materialize:
+            counts = pin(counts)
+        bounds = counts.agg(F.min("bucket").alias("b0"), F.max("bucket").alias("b1"))
+        grid = bounds.select(
+            F.explode(
+                F.sequence(F.col("b0"), F.col("b1"), F.expr(f"interval 1 {grain}"))
+            ).alias("bucket")
+        )
+        out = grid.join(counts, "bucket", "left").withColumn(
+            "n_events", F.coalesce(F.col("n_events"), F.lit(0))
+        )
+        if value_col is not None:
+            out = out.withColumn("sum_value", F.coalesce(F.col("sum_value"), F.lit(0.0)))
+        return out.localCheckpoint(eager=True) if materialize else out
 
 
 def interpolate_gaps(

@@ -1,14 +1,13 @@
 """Multi-mart runner — reference entry point 2
 (``scripts/03_spark_eda_agg.py:44-240``) builds 11 marts by re-scanning
 the curated input once PER MART (SURVEY §4 anti-pattern: 11 jobs × full
-rescan, no cache). This runner persists the input once and fans out the
+rescan, no cache). This runner pins the input once and fans out the
 mart catalog; each mart is still its own job (independent sinks) but
 reads the cached partitions.
 
-At 100 TB, persist() of the full input may not fit even MEMORY_AND_DISK
-budgets — the runner therefore also supports ``shared_scan`` mode off
-(plain re-read) and the real fix at scale: multi-aggregate FUSION, where
-marts sharing a grouping key are computed in ONE pass (``fuse_marts``).
+At 100 TB a pin of the full input may not fit the storage budget; the
+fix at scale is multi-aggregate FUSION, where marts sharing a grouping
+key are computed in ONE pass (``fuse_marts``).
 """
 
 from __future__ import annotations
@@ -16,7 +15,8 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+
+from ..utils.caching import Pins
 
 MartFn = Callable[[DataFrame], DataFrame]
 
@@ -25,15 +25,15 @@ def run_marts(
     input_df: DataFrame,
     marts: Mapping[str, MartFn],
     sink: Callable[[str, DataFrame], None] | None = None,
-    shared_scan: bool = True,
 ) -> dict[str, DataFrame]:
-    """Fan out the mart catalog over a single (optionally persisted) scan.
+    """Fan out the mart catalog over a single pinned scan.
 
-    ``sink(name, df)`` is invoked per mart (e.g. parquet write); when
-    None, the materialized DataFrames are just returned.
+    ``sink(name, df)`` is invoked per mart (e.g. parquet write) while
+    the input is pinned. The returned mart frames are lazy: the pin is
+    released on return, so a mart consumed afterwards re-reads the input.
     """
-    src = input_df.persist(StorageLevel.MEMORY_AND_DISK) if shared_scan else input_df
-    try:
+    with Pins() as pin:
+        src = pin(input_df)
         out: dict[str, DataFrame] = {}
         for name, fn in marts.items():
             df = fn(src)
@@ -41,9 +41,6 @@ def run_marts(
                 sink(name, df)
             out[name] = df
         return out
-    finally:
-        if shared_scan:
-            src.unpersist()
 
 
 def fuse_marts(

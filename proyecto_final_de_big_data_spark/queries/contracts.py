@@ -6,13 +6,14 @@ external oracle gate, so "implemented" and "verified" stay the same set.
 The export round-trips intentionally perform a write inside a query:
 the sink-then-source path IS the operator under test, and the oracle
 pins that a full export/import cycle preserves values exactly. Writes
-go to a fresh ``tempfile.mkdtemp`` dir per invocation.
+go to a fresh temporary directory per invocation, removed before the
+query returns, so each (small) result is computed eagerly while its
+directory exists.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,12 +95,12 @@ def q_canonicalize_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pins that the text round trip preserves every value and type class.",
 )
 def q_export_round_trip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="export_rt_csv_")
-    export_table(_priority_agg(spark, sf_dir), out, fmt="csv", single_file=True)
-    back = read_exported(spark, out, "csv")
-    return back.select(
-        "priority", F.col("n_orders").cast("long"), F.col("total_price").cast("double")
-    )
+    with tempfile.TemporaryDirectory(prefix="export_rt_csv_", ignore_cleanup_errors=True) as out:
+        export_table(_priority_agg(spark, sf_dir), out, fmt="csv", single_file=True)
+        back = read_exported(spark, out, "csv")
+        return back.select(
+            "priority", F.col("n_orders").cast("long"), F.col("total_price").cast("double")
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -109,9 +110,10 @@ def q_export_round_trip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sink -> spark.read.json source, value-exact.",
 )
 def q_export_round_trip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="export_rt_json_")
-    export_table(_priority_agg(spark, sf_dir), out, fmt="json", single_file=True)
-    return read_exported(spark, out, "json").select("priority", "n_orders", "total_price")
+    with tempfile.TemporaryDirectory(prefix="export_rt_json_", ignore_cleanup_errors=True) as out:
+        export_table(_priority_agg(spark, sf_dir), out, fmt="json", single_file=True)
+        back = read_exported(spark, out, "json")
+        return back.select("priority", "n_orders", "total_price").localCheckpoint(eager=True)
 
 
 @register(
@@ -122,9 +124,10 @@ def q_export_round_trip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "to parquet; both read vectorized).",
 )
 def q_export_round_trip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="export_rt_orc_")
-    export_table(_priority_agg(spark, sf_dir), out, fmt="orc")
-    return read_exported(spark, out, "orc").select("priority", "n_orders", "total_price")
+    with tempfile.TemporaryDirectory(prefix="export_rt_orc_", ignore_cleanup_errors=True) as out:
+        export_table(_priority_agg(spark, sf_dir), out, fmt="orc")
+        back = read_exported(spark, out, "orc")
+        return back.select("priority", "n_orders", "total_price").localCheckpoint(eager=True)
 
 
 @register(
@@ -135,9 +138,10 @@ def q_export_round_trip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "encoding must reconstruct the column exactly.",
 )
 def q_export_round_trip_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="export_rt_part_")
-    export_table(_priority_agg(spark, sf_dir), out, fmt="parquet", partition_by=("priority",))
-    return read_exported(spark, out, "parquet").select("priority", "n_orders", "total_price")
+    with tempfile.TemporaryDirectory(prefix="export_rt_part_", ignore_cleanup_errors=True) as out:
+        export_table(_priority_agg(spark, sf_dir), out, fmt="parquet", partition_by=("priority",))
+        back = read_exported(spark, out, "parquet")
+        return back.select("priority", "n_orders", "total_price").localCheckpoint(eager=True)
 
 
 @register(
@@ -162,8 +166,7 @@ def q_export_round_trip_partitioned(spark: SparkSession, sf_dir: str) -> DataFra
 def q_manifest_ingest_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.ingest import build_manifest_record, download_file, manifest_table, upsert_manifest
 
-    out = tempfile.mkdtemp(prefix="ingest_manifest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ingest_manifest_", ignore_cleanup_errors=True) as out:
         manifest = os.path.join(out, "manifest.json")
         for name, month in (("region.parquet", "01"), ("nation.parquet", "01")):
             dest = os.path.join(out, name)
@@ -188,8 +191,6 @@ def q_manifest_ingest_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).crossJoin(F.broadcast(total))
         # Eager: the staging dir (manifest included) is removed on return.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -367,9 +368,10 @@ def q_quarter_resolution_contract(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_compaction_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.compact import compact_dataset
 
-    frag = tempfile.mkdtemp(prefix="compact_frag_")
-    out = tempfile.mkdtemp(prefix="compact_out_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="compact_frag_", ignore_cleanup_errors=True) as frag,
+        tempfile.TemporaryDirectory(prefix="compact_out_", ignore_cleanup_errors=True) as out,
+    ):
         docs = load_table(spark, sf_dir, "documents")
         docs.repartition(48).write.mode("overwrite").parquet(frag)
         report = compact_dataset(spark, frag, out, target_file_bytes=32 * 1024 * 1024)
@@ -384,9 +386,6 @@ def q_compaction_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    finally:
-        shutil.rmtree(frag, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -588,8 +587,7 @@ def q_data_quality_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_merge_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.merge import merge_changes
 
-    base = tempfile.mkdtemp(prefix="cdc_base_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdc_base_", ignore_cleanup_errors=True) as base:
         orders_m = load_table(spark, sf_dir, "orders").withColumn(
             "o_month", F.month("o_orderdate")
         )
@@ -642,8 +640,6 @@ def q_cdc_merge_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Eager: the base tempdir is removed on return.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(
@@ -669,8 +665,7 @@ def q_cdc_merge_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.binary import read_binary_dir, with_path_id
 
-    drop_dir = tempfile.mkdtemp(prefix="media_drop_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="media_drop_", ignore_cleanup_errors=True) as drop_dir:
         docs = (
             load_table(spark, sf_dir, "documents")
             .where((F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 2000))
@@ -691,8 +686,6 @@ def q_media_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("content").alias("digest"),
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
 
 
 @register(
@@ -990,8 +983,7 @@ def q_schema_evolution_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    stage = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="schema_evo_", ignore_cleanup_errors=True) as stage:
         # Old vintage: the column does not exist yet.
         orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
             os.path.join(stage, "v1")
@@ -1017,8 +1009,6 @@ def q_schema_evolution_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(

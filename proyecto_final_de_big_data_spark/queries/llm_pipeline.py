@@ -14,6 +14,7 @@ from ..operators.multimodal import documents_as_media, featurize_media
 from ..operators.similarity import cosine_topk
 from ..operators.similarity_ivf import ivf_cosine_topk
 from ..operators.text import LANG_MARKERS, fingerprint, lang_guess, quality_score, token_count
+from ..utils.caching import Pins
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -209,42 +210,38 @@ def q_simhash_banding_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.simhash import simhash_near_dup_pairs, simhash_signatures
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    # Persist the (tiny: one long per doc) signature frame: it feeds the
-    # exact all-pairs side AND the banded side — without it the
-    # explode+64-agg signature job runs three times.
-    sigs = simhash_signatures(docs, "doc_id", "text").persist()
-    a, b = sigs.alias("a"), sigs.alias("b")
-    exact = (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+    with Pins() as pin:
+        # Pin the (tiny: one long per doc) signature frame: it feeds the
+        # exact all-pairs side AND the banded side — without it the
+        # explode+64-agg signature job runs three times.
+        sigs = pin(simhash_signatures(docs, "doc_id", "text"))
+        a, b = sigs.alias("a"), sigs.alias("b")
+        exact = (
+            a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"),
+                F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+            )
+            .filter(F.col("hamming") <= 3)
         )
-        .filter(F.col("hamming") <= 3)
-    )
-    banded = simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=3, signatures=sigs)
-    full = exact.select("id_a", "id_b").withColumn("__e", F.lit(1)).join(
-        banded.select("id_a", "id_b").withColumn("__b", F.lit(1)), ["id_a", "id_b"], "full_outer"
-    )
-    stats = full.agg(
-        F.sum(F.coalesce(F.col("__e"), F.lit(0))).alias("ne"),
-        F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("nb"),
-        F.sum(F.coalesce(F.col("__e"), F.lit(0)) * F.coalesce(F.col("__b"), F.lit(0))).alias("nc"),
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    from ..utils.caching import materialize_and_release
-
-    return materialize_and_release(
-        n_docs.crossJoin(
+        banded = simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=3, signatures=sigs)
+        full = exact.select("id_a", "id_b").withColumn("__e", F.lit(1)).join(
+            banded.select("id_a", "id_b").withColumn("__b", F.lit(1)), ["id_a", "id_b"], "full_outer"
+        )
+        stats = full.agg(
+            F.sum(F.coalesce(F.col("__e"), F.lit(0))).alias("ne"),
+            F.sum(F.coalesce(F.col("__b"), F.lit(0))).alias("nb"),
+            F.sum(F.coalesce(F.col("__e"), F.lit(0)) * F.coalesce(F.col("__b"), F.lit(0))).alias("nc"),
+        )
+        n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+        return n_docs.crossJoin(
             stats.select(
                 ((F.col("ne") == F.col("nc")) & (F.col("nb") == F.col("nc")))
                 .cast("int")
                 .alias("lossless_ok")
             )
-        ),
-        sigs,
-    )
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -1570,7 +1567,6 @@ def q_semantic_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import cluster_dedup_keep
     from ..operators.semdedup import centroids_by_ids, semantic_dedup_pairs
     from ..operators.similarity import as_double_array
-    from ..utils.caching import materialize_and_release
 
     base = (
         load_table(spark, sf_dir, "embeddings")
@@ -1589,30 +1585,31 @@ def q_semantic_dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union re-ran once per consumer (r12 event-log audit, guide §5).
     corpus = base.unionByName(planted).localCheckpoint(eager=False)
     centroids = centroids_by_ids(corpus, list(range(8)))
-    # Persist the cell assignment (bounded: 320 rows here) — it feeds
-    # BOTH sides of the within-cell self-join, so without it the Arrow
-    # scoring pass and the corpus scan run twice. Likewise persist the
-    # pair frame: it feeds two aggregates and the component-keep branch.
     from ..operators.similarity_ivf import ivf_assign
 
-    assigned = ivf_assign(corpus, centroids).persist()
-    pairs = semantic_dedup_pairs(
-        corpus, centroids, threshold=0.95, assigned=assigned
-    ).persist()
-    kept = cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), "vec_id")
-    stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum((F.col("id_b") == F.col("id_a") + 1000000).cast("int")).alias(
-            "n_twin_pairs"
-        ),
-    )
-    profile = (
-        corpus.agg(F.count(F.lit(1)).alias("n_vecs"))
-        .crossJoin(stats)
-        .crossJoin(kept.agg(F.count(F.lit(1)).alias("n_kept")))
-        .select("n_vecs", "n_pairs", "n_twin_pairs", "n_kept")
-    )
-    return materialize_and_release(profile, pairs, assigned)
+    with Pins() as pin:
+        # Pin the cell assignment (bounded: 320 rows here) — it feeds
+        # BOTH sides of the within-cell self-join, so without it the Arrow
+        # scoring pass and the corpus scan run twice. Likewise pin the
+        # pair frame: it feeds two aggregates and the component-keep branch.
+        assigned = pin(ivf_assign(corpus, centroids))
+        pairs = pin(
+            semantic_dedup_pairs(corpus, centroids, threshold=0.95, assigned=assigned)
+        )
+        kept = cluster_dedup_keep(corpus, pairs.select("id_a", "id_b"), "vec_id")
+        stats = pairs.agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum((F.col("id_b") == F.col("id_a") + 1000000).cast("int")).alias(
+                "n_twin_pairs"
+            ),
+        )
+        profile = (
+            corpus.agg(F.count(F.lit(1)).alias("n_vecs"))
+            .crossJoin(stats)
+            .crossJoin(kept.agg(F.count(F.lit(1)).alias("n_kept")))
+            .select("n_vecs", "n_pairs", "n_twin_pairs", "n_kept")
+        )
+        return profile.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------

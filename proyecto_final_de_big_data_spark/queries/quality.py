@@ -337,10 +337,11 @@ def q_stream_pii_curation_round_trip(spark: SparkSession, sf_dir: str) -> DataFr
 
     from ..operators.pii import redact_pii
 
-    stage = tempfile.mkdtemp(prefix="docs_stream_")
-    out = tempfile.mkdtemp(prefix="docs_curated_sink_")
-    ckpt = tempfile.mkdtemp(prefix="docs_curated_ckpt_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="docs_stream_", ignore_cleanup_errors=True) as stage,
+        tempfile.TemporaryDirectory(prefix="docs_curated_sink_", ignore_cleanup_errors=True) as out,
+        tempfile.TemporaryDirectory(prefix="docs_curated_ckpt_", ignore_cleanup_errors=True) as ckpt,
+    ):
         shutil.copy(f"{sf_dir}/documents.parquet", f"{stage}/part-0.parquet")
         schema = T.StructType(
             [
@@ -391,10 +392,6 @@ def q_stream_pii_curation_round_trip(spark: SparkSession, sf_dir: str) -> DataFr
         )
         # Eager: the sink/checkpoint dirs are removed on return.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _blocklist_oracle() -> str:

@@ -16,6 +16,8 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,16 +26,17 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _stage_events(sf_dir: str, prefix: str, copies: int = 1) -> str:
-    """Stage the events fixture into a fresh directory (the file stream
-    source requires a directory; N copies -> N source files). Callers
-    own the directory and must ``shutil.rmtree`` it in a ``finally`` —
-    stream-mode queries run repeatedly in a long-lived bench session and
-    leaked staging dirs add up."""
-    stage = tempfile.mkdtemp(prefix=prefix)
-    for i in range(copies):
-        shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/part-{i}.parquet")
-    return stage
+@contextmanager
+def _staged_events(sf_dir: str, prefix: str, copies: int = 1) -> Iterator[str]:
+    """The events fixture staged into a temporary directory that lives
+    as long as the ``with`` block (the file stream source requires a
+    directory; N copies -> N source files). Stream-mode queries run
+    repeatedly in a long-lived bench session, where leaked staging dirs
+    add up."""
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as stage:
+        for i in range(copies):
+            shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/part-{i}.parquet")
+        yield stage
 
 
 def _drain_stream(
@@ -178,8 +181,7 @@ def q_session_windows_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tumbling_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "events_stream_tw_")
-    try:
+    with _staged_events(sf_dir, "events_stream_tw_") as stage:
         stream = read_events_stream(spark, stage)
         agg = (
             stream.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -190,8 +192,6 @@ def q_tumbling_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trigger, so the drained table is the full result even for
         # windows a watermark would still hold open in append mode.
         return _drain_stream(spark, agg, "t_tumbling", "complete")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -212,8 +212,7 @@ def q_tumbling_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "events_stream_dd_", copies=2)
-    try:
+    with _staged_events(sf_dir, "events_stream_dd_", copies=2) as stage:
         stream = read_events_stream(spark, stage)
         # Watermark wider than the fixture's event-time span: both copies
         # of every event fall inside the dedup horizon, so the second copy
@@ -224,8 +223,6 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drained = _drain_stream(spark, deduped, "t_dedup", "append")
         return drained.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -247,8 +244,7 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_static_join_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "events_stream_sj_")
-    try:
+    with _staged_events(sf_dir, "events_stream_sj_") as stage:
         stream = read_events_stream(spark, stage)
         cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         joined = stream.join(cust, stream.user_id == cust.c_custkey, "inner")
@@ -256,8 +252,6 @@ def q_stream_static_join_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"), F.avg("value").alias("avg_value")
         )
         return _drain_stream(spark, agg, "t_sjoin", "complete")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -279,8 +273,7 @@ def q_stream_static_join_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "events_stream_sl_")
-    try:
+    with _staged_events(sf_dir, "events_stream_sl_") as stage:
         stream = read_events_stream(spark, stage)
         agg = (
             stream.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
@@ -288,8 +281,6 @@ def q_sliding_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
         )
         return _drain_stream(spark, agg, "t_sliding", "complete")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -309,10 +300,11 @@ def q_sliding_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_file_sink_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "events_stream_fs_")
-    out = tempfile.mkdtemp(prefix="events_sink_")
-    ckpt = tempfile.mkdtemp(prefix="events_ckpt_")
-    try:
+    with (
+        _staged_events(sf_dir, "events_stream_fs_") as stage,
+        tempfile.TemporaryDirectory(prefix="events_sink_", ignore_cleanup_errors=True) as out,
+        tempfile.TemporaryDirectory(prefix="events_ckpt_", ignore_cleanup_errors=True) as ckpt,
+    ):
         stream = read_events_stream(spark, stage)
         # Same state-partition bound as _drain_stream (conf is pinned at
         # stream start; restored for the session's batch queries).
@@ -341,10 +333,6 @@ def q_stream_file_sink_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
         # Eager: the sink/checkpoint dirs are removed on return, so the
         # tiny profile must be computed (and detached from them) now.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -373,8 +361,7 @@ def q_stateful_user_profiles_stream(spark: SparkSession, sf_dir: str) -> DataFra
 
     # Single file -> single micro-batch, which is what makes the
     # update-mode output equal the batch GROUP BY.
-    stage = _stage_events(sf_dir, "events_stream_")
-    try:
+    with _staged_events(sf_dir, "events_stream_") as stage:
         stream = read_events_stream(spark, stage)
         drained = _drain_stream(spark, user_profile_stream(stream), "t_stateful", "update")
         # mean_value * n recovers the running total; *100 + round lands on
@@ -386,8 +373,6 @@ def q_stateful_user_profiles_stream(spark: SparkSession, sf_dir: str) -> DataFra
             .cast("long")
             .alias("total_cents"),
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -413,9 +398,10 @@ def q_stateful_user_profiles_stream(spark: SparkSession, sf_dir: str) -> DataFra
 def q_stream_stream_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream
 
-    stage_a = _stage_events(sf_dir, "events_ssj_a_")
-    stage_b = _stage_events(sf_dir, "events_ssj_b_")
-    try:
+    with (
+        _staged_events(sf_dir, "events_ssj_a_") as stage_a,
+        _staged_events(sf_dir, "events_ssj_b_") as stage_b,
+    ):
         # One user slice (20%) on BOTH sides: the join mechanism, state
         # expiry, and parity check are identical, but buffered state —
         # the whole fixture lands in one micro-batch — stays bounded as
@@ -458,9 +444,6 @@ def q_stream_stream_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum("cents").alias("cents_diff"),
         )
-    finally:
-        shutil.rmtree(stage_a, ignore_errors=True)
-        shutil.rmtree(stage_b, ignore_errors=True)
 
 
 @register(
@@ -495,16 +478,13 @@ def q_stream_stream_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_session_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import read_events_stream, session_counts
 
-    stage = _stage_events(sf_dir, "events_stream_sw_")
-    try:
+    with _staged_events(sf_dir, "events_stream_sw_") as stage:
         stream = read_events_stream(spark, stage)
         # session_counts carries a watermark (required shape for append
         # mode on a live deployment); complete mode re-emits every
         # closed-and-merged session on the final trigger, so the drain
         # is the full result on the bounded fixture.
         return _drain_stream(spark, session_counts(stream), "t_session", "complete")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @register(
@@ -552,10 +532,11 @@ def q_stream_cdc_apply_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..streaming.cdc import apply_change_stream
 
-    base = tempfile.mkdtemp(prefix="cdc_stream_base_")
-    stage = tempfile.mkdtemp(prefix="cdc_stream_changes_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_stream_ckpt_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="cdc_stream_base_", ignore_cleanup_errors=True) as base,
+        tempfile.TemporaryDirectory(prefix="cdc_stream_changes_", ignore_cleanup_errors=True) as stage,
+        tempfile.TemporaryDirectory(prefix="cdc_stream_ckpt_", ignore_cleanup_errors=True) as ckpt,
+    ):
         orders_m = load_table(spark, sf_dir, "orders").withColumn(
             "o_month", F.month("o_orderdate")
         )
@@ -620,10 +601,6 @@ def q_stream_cdc_apply_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame
             .withColumn("n_applied_batches", F.lit(len(applied)).cast("long"))
         )
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -653,8 +630,7 @@ def q_tws_histogram_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.windows import read_events_stream
 
-    stage = _stage_events(sf_dir, "tws_events_")
-    try:
+    with _staged_events(sf_dir, "tws_events_") as stage:
         # PRECONDITION (ADVICE r6): reconciling update-mode output with
         # max(cnt) is sound only if the whole fixture arrives in ONE
         # micro-batch — across multiple batches the idle-gap timer could
@@ -688,5 +664,3 @@ def q_tws_histogram_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drained.groupBy("user_id", "event_type").agg(
             F.max("cnt").alias("cnt")
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)

@@ -27,3 +27,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def persisted_ids(spark):
+    """A callable returning the ids of the RDDs the session holds
+    persisted right now (``persist`` and ``localCheckpoint`` both
+    register one)."""
+
+    def ids() -> set:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next())
+        return out
+
+    return ids

@@ -99,54 +99,43 @@ def test_write_curated_documents_plain_when_unsplit(spark, tmp_path):
     assert spark.read.parquet(root).count() == out.count()
 
 
-def _persisted_ids(spark) -> set:
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
-def _n_persisted(spark) -> int:
-    return len(_persisted_ids(spark))
-
-
-def test_bad_dedup_mode_raises_before_any_persist(spark):
+def test_bad_dedup_mode_raises_before_any_persist(spark, persisted_ids):
     from proyecto_final_de_big_data_spark.pipelines.curation import build_curation
+    from proyecto_final_de_big_data_spark.utils.caching import Pins
 
-    before = _n_persisted(spark)
-    with pytest.raises(ValueError, match="unknown dedup mode"):
-        build_curation(_docs(spark), CurationConfig(dedup="simhashish"))
-    assert _n_persisted(spark) == before  # validation precedes the pin
+    before = persisted_ids()
+    with pytest.raises(ValueError, match="unknown dedup mode"), Pins() as pin:
+        build_curation(_docs(spark), CurationConfig(dedup="simhashish"), pin)
+    assert persisted_ids() - before == set()  # validation precedes the pin
 
 
-def test_run_curation_writes_and_releases_pins(spark, tmp_path):
+def test_run_curation_writes_and_releases_pins(spark, tmp_path, persisted_ids):
     import gc
 
     from proyecto_final_de_big_data_spark.pipelines.curation import run_curation
 
     gc.collect()
-    before = _persisted_ids(spark)  # leftovers from other tests are excluded by id
+    before = persisted_ids()  # leftovers from other tests are excluded by id
     root = str(tmp_path / "curated_run")
     cfg = CurationConfig(mix_stratum_col="lang", split_fractions={"train": 0.5, "eval": 0.5})
     run_curation(_docs(spark), cfg, root)
     # the write path must leave NOTHING NEW cached — no stage pins, no
     # corpus-sized localCheckpoint.
-    assert _persisted_ids(spark) - before == set()
+    assert persisted_ids() - before == set()
     back = spark.read.parquet(root)
     assert back.count() > 0 and "split" in back.columns
 
 
-def test_curate_documents_releases_pins(spark):
+def test_curate_documents_releases_pins(spark, persisted_ids):
     import gc
 
     gc.collect()
-    before = _persisted_ids(spark)
+    before = persisted_ids()
     out = curate_documents(_docs(spark), CurationConfig(mix_stratum_col="lang"))
     # Stage pins are released; the ONLY surviving new entry is the
     # eagerly checkpointed result itself (blocks freed when `out` is
     # GC'd).
-    assert len(_persisted_ids(spark) - before) <= 1
+    assert len(persisted_ids() - before) <= 1
     assert out.count() > 0
 
 
